@@ -26,6 +26,12 @@ Scale notes (100 TB design):
 - ``which()`` returns a DataFrame of ids, not a collected vector; the
   reference's own "return a giant index vector to the driver" pattern is
   the anti-scale path and is opt-in only (``collect=True``).
+- Per-op driver work of a read, counted in py4j calls, is constant in
+  width and in id count: positional predicates travel as ONE SQL string
+  (``IN (...)`` / ``BETWEEN``), and ``to_df`` drops the internal columns
+  instead of re-selecting every user column (each pyspark ``Column``
+  operator costs ~15 py4j round trips through its call-site capture;
+  ``select`` sends its names as SQL strings, one call each).
 """
 
 from __future__ import annotations
@@ -70,10 +76,11 @@ def _warn_sample_unverified() -> None:
     )
 
 
-def _qcol(name: str) -> Column:
-    """Column by exact name — backtick-quoted so dotted names (e.g. the
-    reference's canonical ``Sepal.Length``) resolve literally."""
-    return F.col("`" + name.replace("`", "``") + "`")
+def _sql_name(name: str) -> str:
+    """SQL identifier for an exact column name — backtick-quoted so dotted
+    names (e.g. the reference's canonical ``Sepal.Length``) resolve
+    literally."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 class LazyFrame:
@@ -269,15 +276,15 @@ class LazyFrame:
         sums the channel while referencing every user column, so the
         CSV parser cannot prune — malformed values in any field flag
         the channel. Returns the count of rows the sample-inferred
-        schema failed to parse."""
+        schema failed to parse. Built from two SQL strings, so its py4j
+        cost does not grow with the width."""
         from lazy_frame_spark.sources.csv import CORRUPT_COL
 
-        user_cols = [c for c in vdf.columns
-                     if c not in (CORRUPT_COL, ROW_ID)]
-        checks = vdf.agg(
-            F.sum(F.col(CORRUPT_COL).isNotNull().cast("long")).alias("__bad__"),
-            *[F.count(_qcol(c)).alias(f"__c{i}__")
-              for i, c in enumerate(user_cols)],
+        refs = ", ".join(f"count({_sql_name(c)})" for c in vdf.columns
+                         if c not in (CORRUPT_COL, ROW_ID))
+        checks = vdf.selectExpr(
+            f"sum(CAST({CORRUPT_COL} IS NOT NULL AS BIGINT)) AS __bad__",
+            f"array({refs}) AS __refs__",
         ).collect()[0]
         return int(checks["__bad__"] or 0)
 
@@ -472,7 +479,7 @@ class LazyFrame:
 
         def op(df: DataFrame) -> DataFrame:
             keep = [c for c in df.columns if c == ROW_ID] + names
-            return df.select(*[_qcol(c) for c in keep])
+            return df.selectExpr(*map(_sql_name, keep))
 
         return self._derive(op, self._attrs.restrict(names))
 
@@ -511,7 +518,7 @@ class LazyFrame:
         """
         df = self._with_ids()
         return LazyFrame(
-            df.filter(F.col(ROW_ID).between(int(lo), int(hi))),
+            df.filter(f"{ROW_ID} BETWEEN {int(lo)} AND {int(hi)}"),
             self._attrs.copy(),
             self._order_by,
         )
@@ -522,27 +529,31 @@ class LazyFrame:
         Set semantics in ``__row_id__`` order — the reference's dominant
         behavior (its contiguity shortcut already ignores request order,
         ``R/lazy.frame.R:152``, documented in SURVEY.md §2.1). Small sets
-        become an ``isin`` (pushed to the scan); large sets become a
-        broadcast semi-join against an id DataFrame so the predicate never
-        bloats the plan.
+        become one SQL ``IN`` predicate (pushed to the scan; the ids are
+        ``int()``-validated, so the string is digits only); large sets
+        become a broadcast semi-join against an Arrow-built id DataFrame
+        so the predicate never bloats the plan.
         """
         ids = sorted({int(i) for i in indices})
         if any(i < 1 for i in ids):
             raise IndexError("row indices are 1-based and must be positive")
         df = self._with_ids()
         if not ids:
-            return LazyFrame(df.filter(F.lit(False)), self._attrs.copy(), self._order_by)
-        if len(ids) == ids[-1] - ids[0] + 1:  # contiguous → range pruning
-            pred = F.col(ROW_ID).between(ids[0], ids[-1])
-            return LazyFrame(df.filter(pred), self._attrs.copy(), self._order_by)
-        if len(ids) <= 10_000:
-            pred = F.col(ROW_ID).isin(ids)
-            return LazyFrame(df.filter(pred), self._attrs.copy(), self._order_by)
-        lookup = df.sparkSession.createDataFrame(
-            [(i,) for i in ids], schema=f"{ROW_ID} long"
-        )
-        joined = df.join(F.broadcast(lookup), on=ROW_ID, how="left_semi")
-        return LazyFrame(joined, self._attrs.copy(), self._order_by)
+            out = df.filter("false")
+        elif len(ids) == ids[-1] - ids[0] + 1:  # contiguous → range pruning
+            out = df.filter(f"{ROW_ID} BETWEEN {ids[0]} AND {ids[-1]}")
+        elif len(ids) <= 10_000:
+            out = df.filter(f"{ROW_ID} IN ({','.join(map(str, ids))})")
+        else:
+            import numpy as np
+            import pandas as pd
+
+            lookup = df.sparkSession.createDataFrame(
+                pd.DataFrame({ROW_ID: np.array(ids, dtype=np.int64)}),
+                schema=f"{ROW_ID} long",
+            )
+            out = df.join(F.broadcast(lookup), on=ROW_ID, how="left_semi")
+        return LazyFrame(out, self._attrs.copy(), self._order_by)
 
     def sample_rows(self, n: int, seed: int = 42) -> "LazyFrame":
         """Random point extraction — the vignette's designed-for use case
@@ -566,7 +577,7 @@ class LazyFrame:
     def tail(self, n: int = 6) -> "LazyFrame":
         """Last n rows in positional order (L2, ``R/lazy.frame.R:241-244``)."""
         df = self._with_ids()
-        last = df.orderBy(F.col(ROW_ID).desc()).limit(int(n)).orderBy(ROW_ID)
+        last = df.orderBy(ROW_ID, ascending=False).limit(int(n)).orderBy(ROW_ID)
         return LazyFrame(last, self._attrs.copy(), self._order_by)
 
     # ------------------------------------------------------------------ #
@@ -580,7 +591,7 @@ class LazyFrame:
         names = self._resolve_cols(col)
         if len(names) != 1:
             raise KeyError(f"no such column: {col!r}")
-        return _qcol(names[0])
+        return F.col(_sql_name(names[0]))
 
     def filter(self, col: str | int | Column, op: str | None = None, value: Any = None) -> "LazyFrame":
         """``x[x[,k] op v, ]`` in one Catalyst plan (F3). Either a Column
@@ -713,7 +724,14 @@ class LazyFrame:
         self._ensure_verified()
         if with_row_id:
             return self._with_ids()
-        return self._df.select(*[_qcol(c) for c in self.columns])
+        return self._drop(*self._INTERNAL)
+
+    def _drop(self, *internal: str) -> DataFrame:
+        """``self._df`` without the given internal columns: ONE ``drop``
+        of those present (user column order kept), not a re-select of
+        every user column."""
+        present = [c for c in internal if c in self._df.columns]
+        return self._df.drop(*present) if present else self._df
 
     def to_pandas(self):
         """Materialize via Arrow; re-apply column attributes here — the
@@ -725,10 +743,8 @@ class LazyFrame:
         # whose first data access is to_pandas() would skip the
         # sample-schema check every other read path gets
         self._ensure_verified()
-        cols = self.columns
         if "__row_name__" in self._df.columns:
-            pdf = self._df.select("__row_name__", *[_qcol(c) for c in cols]).toPandas()
-            pdf = pdf.set_index("__row_name__")
+            pdf = self._drop(ROW_ID).toPandas().set_index("__row_name__")
             pdf.index.name = None
         else:
             pdf = self.to_df().toPandas()
