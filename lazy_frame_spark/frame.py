@@ -57,25 +57,6 @@ def _default_buckets(df: DataFrame) -> int:
     return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
 
 
-def _warn_sample_unverified() -> None:
-    """One-time (per call-site) warning for opens that keep a
-    sample-inferred schema WITHOUT the corrupt-channel verification
-    pass: a type first appearing past the head sample silently parses
-    to NULL under PERMISSIVE. Deliberate on cache=False one-shot opens
-    — the warning makes the trade explicit instead of silent."""
-    import warnings
-
-    warnings.warn(
-        "cache=False open keeps the head-sampled CSV schema UNVERIFIED: "
-        "values of a type the ~1000-line sample missed parse to NULL. "
-        "Use cache=True / register() (verified, with automatic "
-        "full-inference fallback), infer_schema=True, or an explicit "
-        "schema= if the file's types may surprise.",
-        UserWarning,
-        stacklevel=4,
-    )
-
-
 def _sql_name(name: str) -> str:
     """SQL identifier for an exact column name — backtick-quoted so dotted
     names (e.g. the reference's canonical ``Sepal.Length``) resolve
@@ -98,19 +79,11 @@ class LazyFrame:
         self._order_by = list(order_by) if order_by else None
         self._cache = cache
         self._cache_handle: DataFrame | None = None
-        # verified sample-infer state (CSV opens): the corrupt-channel
-        # frame to enumerate through, and the one-full-pass fallback
-        self._verify_df: DataFrame | None = None
-        self._reopen_full = None
-        # deferred-verify lineage (pure promise semantics,
-        # man/lazy.frame.Rd:5-9): a frame DERIVED from a still-unverified
-        # open records its root and the op chain from it, so
-        # filter()/select()/rename() stay zero-job plan builders and the
-        # corrupt-count runs at materialization — replaying the chain on
-        # the full-inference reopen if the sample lied
-        self._verify_root: "LazyFrame | None" = None
-        self._verify_ops: tuple = ()
-        self._verify_swapped = False
+        # a CSV open's sampled-schema check (sources.csv.SampleCheck),
+        # shared with the frames derived before it ran, and the op chain
+        # from the open to this frame (() on the open itself)
+        self._check = None
+        self._ops: tuple = ()
 
     # ------------------------------------------------------------------ #
     # construction
@@ -131,30 +104,13 @@ class LazyFrame:
         not given. CSV goes through the engine's schema-infer-once reader
         (sources.csv) supporting sep/header-autodetect/skip/gzip.
 
-        CSV schema inference defaults to VERIFIED sample-infer: the
-        schema comes from a ~1000-line driver-side head peek (no
-        full-scan job — the old default paid a whole dedicated
-        inferSchema pass over the file), and the first enumerate scan
-        verifies it via a PERMISSIVE corrupt-record channel aggregated
-        in the SAME job that builds the positional cache. If any row
-        fails the sampled schema (a type the head sample missed), the
-        open falls back to ONE full-inference pass automatically — so
-        the fast path is free and the slow path costs exactly what it
-        used to. Escapes: ``infer_schema=True`` (always full pass),
-        ``"sample"`` (unverified, reference-style), ``False`` (all
-        strings), or an explicit ``schema=``. The ``skip=N`` path gets
-        the SAME guarantee: ``from_csv`` carries the corrupt channel
-        per row. Verification runs at the FIRST materialization —
-        positional paths fuse it into the enumerate build; pure
-        transformations (filter/select/rename) are zero-job plan
-        builders carrying deferred-verify lineage (the reference's pure
-        promise semantics, man/lazy.frame.Rd:5-9), and the corrupt
-        count runs before any data leaves (to_pandas/collect/to_df/
-        nrow-of-a-filter), replaying the recorded op chain on the
-        full-inference reopen if the sample lied. ``cache=False``
-        one-shot opens skip verification by design (a dedicated
-        full-width parse would double the one-shot cost) and emit a
-        one-time warning instead.
+        CSV schema inference defaults to VERIFIED sample-infer (also on
+        the ``skip=N`` path): types from a ~1000-line head peek, checked
+        at the first materialization, with ONE full-inference reopen if
+        the sample lied (``sources.csv.SampleCheck``). Escapes:
+        ``infer_schema=True`` (always full pass), ``"sample"``
+        (unverified, reference-style), ``False`` (all strings), or an
+        explicit ``schema=``.
 
         ``cache=False`` skips persisting the enumerated frame: the right
         mode for ONE-shot positional queries (open → slice → done), where
@@ -163,19 +119,16 @@ class LazyFrame:
         better, ``register()`` the frame once.
         """
         fmt = format or _infer_format(path)
+        check = None
         if fmt == "csv":
-            from lazy_frame_spark.sources.csv import CORRUPT_COL, open_csv
+            from lazy_frame_spark.sources.csv import SampleCheck, open_csv
 
             opts = dict(options)
             opts.setdefault("infer_schema", "verified")
-            df = open_csv(spark, path, **opts)
-            if CORRUPT_COL in df.columns:
-                lf = cls(df.drop(CORRUPT_COL), order_by=order_by,
-                         cache=cache)
-                lf._verify_df = df
-                full = dict(opts, infer_schema=True)
-                lf._reopen_full = lambda: open_csv(spark, path, **full)
-                return lf
+            full = dict(opts, infer_schema=True)
+            df, check = SampleCheck.split(
+                open_csv(spark, path, **opts),
+                lambda: open_csv(spark, path, **full))
         elif fmt == "parquet":
             df = spark.read.options(**{k: str(v) for k, v in options.items()}).parquet(path)
         elif fmt == "json":
@@ -201,7 +154,9 @@ class LazyFrame:
             df = read_versioned(spark, path, version=version)
         else:
             raise ValueError(f"unsupported format {fmt!r}")
-        return cls(df, order_by=order_by, cache=cache)
+        lf = cls(df, order_by=order_by, cache=cache)
+        lf._check = check
+        return lf
 
     @classmethod
     def from_df(
@@ -217,18 +172,17 @@ class LazyFrame:
     # ------------------------------------------------------------------ #
 
     def _with_ids(self) -> DataFrame:
-        if self._verify_root is not None:
-            # a derived child can't fuse the root's verify into its own
-            # enumerate (the corrupt channel lives on the root's frame):
-            # settle the chain first, then enumerate the settled plan
+        # the open's own enumerate build carries the pending check (its
+        # one chance to run fused); any other frame runs it standalone
+        check = self._check
+        fuse = (check is not None and check.pending and not self._ops
+                and self._cache and ROW_ID not in self._df.columns)
+        if not fuse:
             self._ensure_verified()
-        if ROW_ID in self._df.columns:
-            # skip>0 CSV opens arrive with ids already attached (the
-            # text-read path rebases them), so there is no enumerate
-            # build to fuse verification into — the standalone
-            # first-touch verify covers them
-            self._ensure_verified()
-            return self._df
+            if ROW_ID in self._df.columns:
+                # skip>0 CSV opens arrive with ids already attached (the
+                # text-read path rebases them)
+                return self._df
         # enumerate + persist: the reference pays its newline-index scan
         # once at open (src/lazy.frame.c:252-298) and every positional
         # query reuses it — same one-time cost here, held to ONE source
@@ -237,7 +191,7 @@ class LazyFrame:
         # is built by the same job that reads the per-bucket counts. At
         # cluster scale, prefer register() (ids persisted to Parquet,
         # with row-group pruning on __row_id__) over in-memory caching.
-        src = self._verify_df if self._verify_df is not None else self._df
+        src = check.channel if fuse else self._df
         bounds = None
         if self._order_by:
             bounds = parquet_footer_bounds(
@@ -246,159 +200,54 @@ class LazyFrame:
         df, handle = enumerate_rows(
             src, order_by=self._order_by, bounds=bounds, cache=self._cache
         )
-        if self._verify_df is not None:
-            if self._cache:
-                df, handle = self._verify_enumerated(df, handle)
-                if df is None:  # sample lied — rebuilt on the full-infer path
-                    return self._with_ids()
-            else:
-                # cache=False is the minimum-touch one-shot mode: ids
-                # come from the pruned line-count scan (the reference's
-                # newline-index work — no field parsing), and schema
-                # verification is deliberately NOT added — a dedicated
-                # full-width parse would double the one-shot cost. The
-                # sampled schema keeps PERMISSIVE null semantics here
-                # (still a 1000-line sample vs the reference's
-                # never-verified 5); cache=True or register() verifies.
-                # A one-time warning makes the silent-NULL trade
-                # explicit to the caller (round-8 ADVICE).
-                from lazy_frame_spark.sources.csv import CORRUPT_COL
-
-                _warn_sample_unverified()
-                df = df.drop(CORRUPT_COL)
-                self._verify_df = None
+        if fuse:
+            df = check.run(df, handle)
+            self._settle()
+            if df is None:  # the sample lied: enumerate the reopen
+                return self._with_ids()
         self._cache_handle = handle
         self._df = df
         return df
 
-    def _count_corrupt(self, vdf: DataFrame) -> int:
-        """The ONE corrupt-channel aggregate both verify paths share:
-        sums the channel while referencing every user column, so the
-        CSV parser cannot prune — malformed values in any field flag
-        the channel. Returns the count of rows the sample-inferred
-        schema failed to parse. Built from two SQL strings, so its py4j
-        cost does not grow with the width."""
-        from lazy_frame_spark.sources.csv import CORRUPT_COL
-
-        refs = ", ".join(f"count({_sql_name(c)})" for c in vdf.columns
-                         if c not in (CORRUPT_COL, ROW_ID))
-        checks = vdf.selectExpr(
-            f"sum(CAST({CORRUPT_COL} IS NOT NULL AS BIGINT)) AS __bad__",
-            f"array({refs}) AS __refs__",
-        ).collect()[0]
-        return int(checks["__bad__"] or 0)
-
     def _ensure_verified(self) -> None:
-        """Standalone schema verification for the FIRST materialization
-        on any non-positional path (to_df/to_pandas/collect/...):
-        positional paths fuse the same check into the enumerate build
-        (``_verify_enumerated``), and whichever runs first consumes the
-        pending state — so the verified-by-default contract holds on
-        EVERY read path. Transformations (filter/select/rename) do NOT
-        trigger it — they record deferred lineage via ``_derive`` and
-        the check runs here, at the materialization boundary, restoring
-        the reference's pure promise semantics (man/lazy.frame.Rd:5-9).
-        cache=False one-shot opens skip it by design (a dedicated
-        full-width parse would double the one-shot cost) and warn once
-        instead."""
-        if self._verify_root is not None:
-            if not self._sync_swapped():
-                self._verify_root._ensure_verified()
-                self._sync_swapped()
-            return
-        if self._verify_df is None:
-            return
-        if not self._cache:
-            _warn_sample_unverified()
-            self._verify_df = None
-            return
-        self._verify_attached(self._verify_df)
+        """Run this frame's pending sample-schema check standalone (the
+        materialization boundary of every non-positional read), then
+        settle."""
+        check = self._check
+        if check is not None and check.pending:
+            if self._cache:
+                check.run()
+            else:
+                check.skip()
+        self._settle()
 
-    def _sync_swapped(self) -> bool:
-        """Settle a derived frame whose root's verify has already run
-        (consumed by some other access). If the root swapped to the
-        full-inference reopen, replay this frame's recorded op chain on
-        the root's new plan; either way the lineage is freed. Pure plan
-        surgery — no Spark job (the root's verify already ran). Returns
-        False while the root's verify is still pending."""
-        root = self._verify_root
-        if root is None:
-            return True
-        if root._verify_df is not None:
-            return False
-        if root._verify_swapped:
-            df = root._df
-            for op in self._verify_ops:
+    def _settle(self) -> None:
+        """Adopt the outcome of a check that has run (here or through
+        any frame sharing it): if the sample lied, replay this frame's
+        op chain on the full-inference reopen. Plan surgery only."""
+        check = self._check
+        if check is None or check.pending:
+            return
+        if check.state == "swapped":
+            df = check.reopened
+            for op in self._ops:
                 df = op(df)
             self._df = df
-        self._verify_root = None
-        self._verify_ops = ()
-        return True
+        self._check, self._ops = None, ()
 
     def _derive(self, op, attrs: ColumnAttrs) -> "LazyFrame":
         """Build a derived LazyFrame as pure plan construction — zero
         Spark jobs. ``op`` is a replayable ``DataFrame -> DataFrame``
         closure (name/expression-based only — Column expressions are
         unresolved in Spark, so the same closure applies cleanly to the
-        full-inference reopen whose column TYPES may differ). While the
-        chain's root still has a pending sample-schema verify, the child
-        records (root, op-chain) so the materialization-time check can
-        rebuild it if the sample lied."""
-        self._sync_swapped()  # never derive from a stale pre-swap plan
+        full-inference reopen whose column TYPES may differ). A pending
+        check is shared with the child, which records its op chain."""
+        self._settle()  # never derive from a stale pre-swap plan
         child = LazyFrame(op(self._df), attrs, self._order_by,
                           cache=self._cache)
-        root = self._verify_root
-        if root is None and self._verify_df is not None:
-            root = self
-        if root is not None and root._verify_df is not None:
-            child._verify_root = root
-            child._verify_ops = (*self._verify_ops, op)
+        if self._check is not None:
+            child._check, child._ops = self._check, (*self._ops, op)
         return child
-
-    def _verify_attached(self, vdf: DataFrame):
-        """ONE corrupt-count aggregate over the verify frame. Clean →
-        ``self`` keeps its frame (returns it); dirty → swap in the
-        full-inference reopen and return None."""
-        bad = self._count_corrupt(vdf)
-        self._verify_df = None
-        if bad:
-            if self._reopen_full is None:
-                raise ValueError(
-                    f"{bad} rows failed the sample-inferred schema — "
-                    "pass infer_schema=True or an explicit schema"
-                )
-            self._df = self._reopen_full()
-            self._verify_swapped = True
-            return None
-        return self._df
-
-    def _verify_enumerated(self, df: DataFrame, handle: DataFrame | None):
-        """Schema verification FUSED into the enumerate build: the
-        shared corrupt-count aggregate both materializes the positional
-        cache and counts rows the sample-inferred schema failed to
-        parse. Zero extra passes on the (overwhelmingly common)
-        honest-sample path; if the sample lied, fall back to ONE
-        full-inference pass — exactly what the old always-full-infer
-        default paid up front on every open."""
-        from lazy_frame_spark.sources.csv import CORRUPT_COL
-
-        bad = self._count_corrupt(df)
-        if bad:
-            try:
-                (handle or df).unpersist()
-            except Exception:
-                pass
-            self._verify_df = None
-            if self._reopen_full is None:
-                raise ValueError(
-                    f"{bad} rows failed the sample-inferred schema — pass "
-                    "infer_schema=True or an explicit schema"
-                )
-            self._df = self._reopen_full()
-            self._verify_swapped = True
-            return None, None
-        self._verify_df = None
-        return df.drop(CORRUPT_COL), handle
 
     def close(self) -> None:
         """Release any persisted state (M7 finalizer parity,
@@ -444,14 +293,12 @@ class LazyFrame:
         return self._derive(op, self._attrs.renamed(mapping))
 
     def nrow(self) -> int:
-        # a derived chain must settle first: a filter's row count DEPENDS
-        # on the schema (a sample-missed type parses to NULL →
-        # compare-false), so counting a stale pre-swap plan would lie.
-        # Plain root counts are verification-invariant (PERMISSIVE keeps
-        # every row under either schema), so an unfiltered open→nrow()
-        # stays job-minimal.
-        if self._verify_root is not None:
+        # a derived chain's count depends on the schema (a sample-missed
+        # value parses to NULL → compare-false), so it checks first; the
+        # open's own count is check-invariant and stays job-minimal
+        if self._ops:
             self._ensure_verified()
+        self._settle()
         return self._df.count()
 
     def ncol(self) -> int:
@@ -687,8 +534,7 @@ class LazyFrame:
 
         # decode is TYPE-dependent (the NumericType gate below reads the
         # current schema), so unlike filter/select it cannot be replayed
-        # blindly on a full-inference swap — settle any pending verify
-        # first instead of recording deferred lineage
+        # on a full-inference reopen — check first instead of deriving
         self._ensure_verified()
         df = self._df
         attrs = self._attrs.copy()
@@ -704,7 +550,7 @@ class LazyFrame:
                 if not isinstance(df.schema[c].dataType, NumericType):
                     continue
                 arr = F.array(*[F.lit(str(lv)) for lv in levels])
-                code = F.col(c).cast("int")
+                code = F.col(_sql_name(c)).cast("int")
                 df = df.withColumn(
                     c,
                     F.when(
@@ -738,10 +584,7 @@ class LazyFrame:
         materialization boundary, exactly where the reference re-applies
         them (R/lazy.frame.R:167-178). A configured row-names column
         becomes the pandas index (R row.names semantics)."""
-        # the __row_name__ branch below reads self._df directly, so the
-        # verify hook must run HERE too — otherwise a row_names= open
-        # whose first data access is to_pandas() would skip the
-        # sample-schema check every other read path gets
+        # the __row_name__ branch reads self._df directly: check here
         self._ensure_verified()
         if "__row_name__" in self._df.columns:
             pdf = self._drop(ROW_ID).toPandas().set_index("__row_name__")
@@ -777,20 +620,14 @@ class LazyFrame:
 
     @property
     def schema(self):
-        """Column names and types. PROVISIONAL before the first
-        materialization of a verified sample-infer CSV open: the types
-        come from the head-sample inference, and the deferred
-        verification (``_ensure_verified``, triggered at
-        ``to_pandas``/``collect``/count) swaps in a full-inference
-        reopen IF the sample lied — a column the sample saw as int can
-        widen to double/string once the full file is read. Parquet
-        opens and already-materialized frames report settled types.
-        This is the documented trade for job-free schema peeks (a
-        purist stable-schema caller can force settlement with
-        ``nrow()`` first)."""
+        """Column names and types. Reading it runs a pending CSV sample
+        check (``to_df``), so the types reported are the settled ones:
+        a column the head sample saw as int may come back double or
+        string if the sample lied."""
         return self.to_df().schema
 
     def explain(self, mode: str = "formatted") -> None:
+        self._settle()
         self._df.explain(mode=mode)
 
     def register(self, path: str, order_by: Sequence[str] | None = None) -> "LazyFrame":
@@ -805,33 +642,33 @@ class LazyFrame:
         whose attrs live only in the in-memory handle
         (``R/lazy.frame.R:17-35``)."""
         tmp = LazyFrame(self._df, self._attrs, order_by or self._order_by)
+        # shares the check, which runs (fused on an open) even for a
+        # cache=False open: the stored types are the settled ones
+        tmp._check, tmp._ops = self._check, self._ops
         df = tmp._with_ids()
         for col, attrs in self._attrs.items():
             if attrs and col in df.columns:
                 df = df.withMetadata(col, {"lazy_frame_attrs": attrs})
         df.write.mode("overwrite").parquet(path)
         tmp.close()  # the registered parquet supersedes the in-memory cache
-        spark = df.sparkSession
-        back = spark.read.parquet(path)
-        attrs = self._attrs.copy()
-        for f in back.schema.fields:
-            stored = f.metadata.get("lazy_frame_attrs")
-            if stored:
-                for k, v in stored.items():
-                    attrs.set(f.name, k, v)
-        return LazyFrame(back, attrs, self._order_by)
+        back = df.sparkSession.read.parquet(path)
+        return LazyFrame(back, _stored_attrs(back, self._attrs.copy()),
+                         self._order_by)
 
     @classmethod
     def open_registered(cls, spark: SparkSession, path: str) -> "LazyFrame":
         """Re-open a registered frame: persisted ids + stored column attrs."""
         df = spark.read.parquet(path)
-        attrs = ColumnAttrs()
-        for f in df.schema.fields:
-            stored = f.metadata.get("lazy_frame_attrs")
-            if stored:
-                for k, v in stored.items():
-                    attrs.set(f.name, k, v)
-        return cls(df, attrs)
+        return cls(df, _stored_attrs(df, ColumnAttrs()))
+
+
+def _stored_attrs(df: DataFrame, attrs: ColumnAttrs) -> ColumnAttrs:
+    """``attrs`` updated with the column attributes ``register()`` stored
+    in the parquet footer of ``df``."""
+    for f in df.schema.fields:
+        for k, v in (f.metadata.get("lazy_frame_attrs") or {}).items():
+            attrs.set(f.name, k, v)
+    return attrs
 
 
 def _infer_format(path: str) -> str:

@@ -38,6 +38,9 @@ from __future__ import annotations
 
 import csv as _csv
 import io
+import warnings
+from collections.abc import Callable
+from contextlib import suppress
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,8 +54,7 @@ SAMPLE_LINES = 5  # the reference samples at most 5 rows (R/lazy.frame.R:67-70)
 #: verified-infer mode: head-sample size (driver-side peek, no cluster job)
 VERIFY_SAMPLE_LINES = 1000
 #: verified-infer mode: the PERMISSIVE corrupt-record channel appended to
-#: the sampled schema — LazyFrame aggregates it in the same job that
-#: builds the positional cache, then drops it from the user columns
+#: the sampled schema (counted and dropped by ``SampleCheck``)
 CORRUPT_COL = "__lfs_corrupt__"
 
 #: decimal-separator → Java locale whose DecimalFormat uses it (Spark
@@ -83,6 +85,118 @@ def _decimalize(
     return T.StructType(fields), casts
 
 
+def _with_corrupt_channel(schema: T.StructType) -> T.StructType:
+    """``schema`` plus the verified-infer corrupt channel field."""
+    if CORRUPT_COL in schema.fieldNames():
+        raise ValueError(
+            f"column name {CORRUPT_COL!r} collides with the "
+            "verified-infer corrupt channel — rename it or pass "
+            "infer_schema=True"
+        )
+    return T.StructType(
+        [*schema.fields, T.StructField(CORRUPT_COL, T.StringType(), True)])
+
+
+class SampleCheck:
+    """The pending check of one verified-infer open's sampled schema.
+
+    ``LazyFrame.open`` reads a CSV by default with the schema of a
+    ~1000-line driver-side head peek (no inference job) and the
+    PERMISSIVE corrupt channel, so a value of a type the sample missed
+    lands its raw line in ``CORRUPT_COL`` instead of silently parsing
+    to NULL. The check counts that channel ONCE per open, at the first
+    materialization:
+
+    - fused into the open's own row-id build: the job that persists
+      the positional cache also returns the count, so an honest sample
+      costs no extra pass;
+    - otherwise (to_pandas/collect/to_df, a derived frame's nrow or
+      positional read, a skip>0 open whose ids come attached)
+      standalone over the channel frame.
+
+    filter/select/rename stay zero-job plan builders (the reference's
+    promise semantics, man/lazy.frame.Rd:5-9): every frame derived
+    before the check ran shares this object and records its op chain.
+    If the sample lied, the check records ONE full-inference reopen —
+    what the old always-full-infer default paid up front — and each
+    frame replays its own chain on it (the ops are name/expression
+    based, so they apply to the reopen whose types differ). The open's
+    own row count needs no check: PERMISSIVE keeps every row under
+    either schema.
+
+    The count references every user column so the CSV parser cannot
+    prune (a malformed value in any field flags the channel), and is
+    two SQL strings, so its py4j cost does not grow with the width.
+
+    ``cache=False`` opens skip it (``skip``): they are one-shot, and a
+    dedicated full-width parse would double their cost. They keep the
+    sample's PERMISSIVE NULLs (still 1000 lines against the reference's
+    never-verified 5) and warn once. ``register()`` runs the check
+    whatever the open's cache mode.
+    """
+
+    def __init__(self, channel: DataFrame, reopen: Callable[[], DataFrame]):
+        self.channel: DataFrame | None = channel  # the open, channel included
+        self._reopen = reopen
+        self.state = "pending"  # → "clean" | "swapped" | "unverified"
+        self.reopened: DataFrame | None = None
+
+    @classmethod
+    def split(
+        cls, df: DataFrame, reopen: Callable[[], DataFrame]
+    ) -> tuple[DataFrame, SampleCheck | None]:
+        """``(user frame, check)`` for a frame ``open_csv`` returned; a
+        frame without the channel has nothing to check."""
+        if CORRUPT_COL not in df.columns:
+            return df, None
+        return df.drop(CORRUPT_COL), cls(df, reopen)
+
+    @property
+    def pending(self) -> bool:
+        return self.state == "pending"
+
+    def run(
+        self, enumerated: DataFrame | None = None,
+        handle: DataFrame | None = None,
+    ) -> DataFrame | None:
+        """Count the rows the sample failed to parse, over ``enumerated``
+        (the fused row-id build, persisted as ``handle``) or else the
+        channel frame. Returns ``enumerated`` without the channel if the
+        sample held; None otherwise."""
+        counted = self.channel if enumerated is None else enumerated
+        refs = ", ".join(
+            "count(`" + c.replace("`", "``") + "`)" for c in counted.columns
+            if c not in (CORRUPT_COL, ROW_ID))
+        bad = counted.selectExpr(
+            f"sum(CAST({CORRUPT_COL} IS NOT NULL AS BIGINT)) AS __bad__",
+            f"array({refs}) AS __refs__",
+        ).collect()[0]["__bad__"]
+        self.channel = None
+        if not bad:
+            self.state = "clean"
+            return None if enumerated is None else enumerated.drop(CORRUPT_COL)
+        if handle is not None:
+            with suppress(Exception):
+                handle.unpersist()
+        self.reopened = self._reopen()
+        self.state = "swapped"
+        return None
+
+    def skip(self) -> None:
+        """Leave the sampled schema unchecked, and say so once."""
+        warnings.warn(
+            "cache=False open keeps the head-sampled CSV schema UNVERIFIED: "
+            "values of a type the ~1000-line sample missed parse to NULL. "
+            "Use cache=True / register() (verified, with automatic "
+            "full-inference fallback), infer_schema=True, or an explicit "
+            "schema= if the file's types may surprise.",
+            UserWarning,
+            stacklevel=5,
+        )
+        self.channel = None
+        self.state = "unverified"
+
+
 def open_csv(
     spark: SparkSession,
     path: str,
@@ -108,10 +222,10 @@ def open_csv(
     'ISO-8859-1'). ``infer_schema``: True (full pass), "sample" (≤5-line
     head, reference-style), "verified" (≤1000-line head sample PLUS a
     PERMISSIVE corrupt-record channel ``CORRUPT_COL`` appended to the
-    schema — plumbing for LazyFrame.open's default path, which verifies
-    the sampled schema during its enumerate scan and drops the channel;
-    direct callers must drop/verify it themselves), or False (all
-    strings). ``multiline``: allow
+    schema — plumbing for LazyFrame.open's default path, whose
+    ``SampleCheck`` counts and drops the channel; direct callers must
+    drop/verify it themselves), or False (all strings). ``multiline``:
+    allow
     quoted fields to span newlines — SCALE WARNING: a multiLine CSV is not
     line-splittable, so Spark reads each FILE as one task; at 100 TB keep
     multiline inputs as many moderate files, or convert to parquet at
@@ -192,30 +306,15 @@ def open_csv(
             df = reader.schema(schema).csv(path)
         elif infer_schema == "verified":
             # sample-infer from a ~1000-line driver-side head peek (no
-            # full-scan job), then let the FIRST real scan verify: any
-            # row the sampled schema cannot parse (a type that only
-            # reveals itself later in the file) lands its raw line in
-            # the corrupt channel instead of silently nulling fields.
-            # LazyFrame._with_ids aggregates the channel in the same
-            # job that builds the positional cache — schema inference
-            # and id assignment fused into ONE pass where the old
-            # default paid a dedicated full inferSchema scan up front.
+            # full-scan job); any row the sampled schema cannot parse
+            # lands its raw line in the corrupt channel instead of
+            # silently nulling fields, for SampleCheck to count
             data_rows = parsed[1:] if has_header else parsed
             sampled = _infer_schema_from_sample(data_rows, names)
             sampled, casts = _decimalize(sampled, decimal)
-            if CORRUPT_COL in {f.name for f in sampled.fields}:
-                raise ValueError(
-                    f"column name {CORRUPT_COL!r} collides with the "
-                    "verified-infer corrupt channel — rename it or pass "
-                    "infer_schema=True"
-                )
-            verified = T.StructType(
-                list(sampled.fields)
-                + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-            )
             df = (
                 reader.option("columnNameOfCorruptRecord", CORRUPT_COL)
-                .schema(verified).csv(path)
+                .schema(_with_corrupt_channel(sampled)).csv(path)
             )
         elif infer_schema == "sample":
             # reference-style inference from the ≤5-line head sample
@@ -351,16 +450,7 @@ def _open_with_skip(
             schema = _infer_schema_from_sample(data_rows, names)
             schema, casts = _decimalize(schema, decimal)
             if infer_schema == "verified":
-                if CORRUPT_COL in {f.name for f in schema.fields}:
-                    raise ValueError(
-                        f"column name {CORRUPT_COL!r} collides with the "
-                        "verified-infer corrupt channel — rename it or "
-                        "pass infer_schema=True"
-                    )
-                schema = T.StructType(
-                    list(schema.fields)
-                    + [T.StructField(CORRUPT_COL, T.StringType(), True)]
-                )
+                schema = _with_corrupt_channel(schema)
                 verified = True
     else:
         if isinstance(schema, str):
@@ -374,8 +464,8 @@ def _open_with_skip(
     if verified:
         # same contract as the skip=0 reader: a row the sampled schema
         # cannot parse lands its raw line in CORRUPT_COL instead of
-        # silently NULLing fields; LazyFrame counts the channel on
-        # first touch and falls back to the full-inference path above
+        # silently NULLing fields (SampleCheck counts it; its fallback
+        # is the full-inference path above)
         opts["columnNameOfCorruptRecord"] = CORRUPT_COL
     parsed = body.select(
         F.col(ROW_ID),

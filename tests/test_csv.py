@@ -327,13 +327,14 @@ def test_verified_infer_clean_fast_path(spark, tmp_path):
     p.write_text("a,b,c\n" + "".join(f"{i},{i * 1.5},s{i}\n"
                                      for i in range(1500)))
     lf = LazyFrame.open(spark, str(p), format="csv")
+    check = lf._check
     assert lf.columns == ["a", "b", "c"]          # channel never surfaces
     df = lf._with_ids()
     assert "__lfs_corrupt__" not in df.columns
     assert df.count() == 1500
     types = {f.name: f.dataType.simpleString() for f in df.schema}
     assert types["a"] == "bigint" and types["b"] == "double"
-    assert lf._verify_df is None                  # verification settled
+    assert check.state == "clean"                 # verification settled
     lf.close()
 
 
@@ -462,18 +463,19 @@ def test_transformations_job_free_until_materialization(spark, tmp_path_factory)
     p.write_text("id,val\n" + "\n".join(f"{i},{i * 2}" for i in range(1, n + 1)) + "\n")
 
     lf = LazyFrame.open(spark, str(p))
-    assert lf._verify_df is not None  # verify pending after open
+    check = lf._check
+    assert check.state == "pending"  # verify pending after open
 
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None) or [])
     chained = lf.filter("val", ">", 100).select(["id"]).rename({"id": "ident"})
     after = set(tracker.getJobIdsForGroup(None) or [])
     assert after == before, "transformations launched a Spark job"
-    assert lf._verify_df is not None          # still pending
-    assert chained._verify_root is lf         # lineage recorded
+    assert check.state == "pending"           # still pending
+    assert chained._check is check            # lineage shared with chain
 
     got = chained.to_pandas()                 # materialization verifies
-    assert lf._verify_df is None              # consumed exactly here
+    assert check.state == "clean"             # consumed exactly here
     assert got["ident"].min() == 51 and len(got) == n - 50
     lf.close()
 
@@ -499,10 +501,68 @@ def test_deferred_verify_replays_chain_on_lying_sample(spark, tmp_path_factory):
     sibling = lf.filter("val", "==", 3.5)              # second pre-verify chain
     rows = hit.to_pandas()                             # triggers verify + swap
     assert rows["id"].tolist() == [liar]
-    assert lf._verify_swapped                          # sample lied, swapped
+    assert lf._check.state == "swapped"                # sample lied, swapped
+    assert lf.schema["val"].dataType.simpleString() == "double"
     # the sibling was built against the pre-swap plan: materialization
     # must settle it onto the swapped root, not count NULL-compares
     assert sibling.nrow() == 1
     # chains derived AFTER the swap see the full-inferred schema directly
     assert lf.filter("val", "==", 3.5).nrow() == 1
+    lf.close()
+
+
+@pytest.mark.parametrize("cache", [True, False])
+def test_register_runs_the_sample_check(spark, late_float_csv, tmp_path,
+                                        cache):
+    """register() stores the settled schema, whatever the open's cache
+    mode: the column the head sample saw as bigint is written as double,
+    and the late value survives instead of landing as NULL."""
+    lf = LazyFrame.open(spark, late_float_csv, cache=cache)
+    reg = lf.register(str(tmp_path / "r"))
+    assert dict(reg.to_df().dtypes)["a"] == "double"
+    assert reg.rows([1501]).to_pandas()["a"].tolist() == [999.25]
+    assert dict(lf.to_df().dtypes)["a"] == "double"  # the open adopts it
+    reg.close()
+
+
+def _new_jobs(spark, fn):
+    """Spark jobs ``fn`` launched (the listener bus is drained on both
+    sides, so the status tracker has seen every job)."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    tracker = spark.sparkContext.statusTracker()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None) or [])
+    fn()
+    bus.waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup(None) or []) - before)
+
+
+@pytest.mark.parametrize("lies, jobs", [(False, 6), (True, 8)])
+def test_first_rows_fuses_the_sample_check(spark, tmp_path, monkeypatch,
+                                           lies, jobs):
+    """The first rows() after a default open runs the sample check inside
+    the row-id build: on a clean file it launches as many jobs as the
+    build alone did before the check moved into its own object (6), and
+    a lying sample falls back to ONE full-inference reopen (8 jobs)."""
+    from lazy_frame_spark.sources import csv as csv_source
+
+    opens = []
+    real = csv_source.open_csv
+
+    def counting(*args, **kwargs):
+        opens.append(kwargs.get("infer_schema"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(csv_source, "open_csv", counting)
+    rows = [f"{i},s{i}" for i in range(2000)]
+    if lies:
+        rows[1500] = "999.25,late"
+    p = tmp_path / "first_rows.csv"
+    p.write_text("a,b\n" + "\n".join(rows) + "\n")
+
+    lf = LazyFrame.open(spark, str(p))
+    assert _new_jobs(spark, lambda: lf.rows([3, 1501])) == jobs
+    assert opens == (["verified", True] if lies else ["verified"])
+    got = lf.rows([1501]).to_pandas()["a"].tolist()
+    assert got == ([999.25] if lies else [1500])
     lf.close()

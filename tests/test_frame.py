@@ -188,3 +188,16 @@ def test_decode_factors_skips_value_typed_string_factor(spark):
     # the skipped column KEEPS its levels attr for the pandas boundary
     assert lf.decode_factors().column_attr("tag", "levels") == ["a", "b", "c"]
     assert lf.decode_factors().column_attr("code", "levels") is None
+
+
+def test_decode_factors_dotted_name(spark):
+    """A numeric factor column with a dotted name (the reference's
+    canonical ``Sepal.Length``) decodes instead of failing to resolve."""
+    from lazy_frame_spark import LazyFrame
+
+    df = spark.createDataFrame([(1, 1), (2, 2), (3, 3)],
+                               "id long, `Sepal.Length` int")
+    lf = LazyFrame.from_df(df, cache=False)
+    lf.set_column_attr("Sepal.Length", "levels", ["a", "b", "c"])
+    got = lf.decode_factors().to_df().orderBy("id").collect()
+    assert [r["Sepal.Length"] for r in got] == ["a", "b", "c"]

@@ -174,8 +174,9 @@ USER_COLS = ["Sepal.Length", "we`ird", "c"]
 def test_to_df_drops_internal_columns_only(spark, odd_names_csv):
     path, liar = odd_names_csv
     lf = LazyFrame.open(spark, path, row_names=1)
+    check = lf._check
     with_ids = lf.to_df(with_row_id=True)    # fused verify runs here
-    assert lf._verify_swapped                # the sample lied: full infer
+    assert check.state == "swapped"          # the sample lied: full infer
     assert with_ids.columns == ["__row_name__", *USER_COLS, ROW_ID]
     assert lf.to_df().columns == USER_COLS
     pdf = lf.to_pandas()
@@ -195,8 +196,9 @@ def test_standalone_verify_falls_back_with_odd_names(spark, odd_names_csv):
     runs the standalone corrupt count over the backtick-escaped names."""
     path, liar = odd_names_csv
     lf = LazyFrame.open(spark, path, row_names=1)
+    check = lf._check
     pdf = lf.to_pandas()
-    assert lf._verify_swapped
+    assert check.state == "swapped"
     assert pdf.loc[f"r{liar}", "Sepal.Length"] == 3.5
     assert list(pdf.columns) == USER_COLS
     lf.close()
